@@ -162,92 +162,6 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     return out
 
 
-def link_prediction(
-    pairs: DataFrame,
-    min_common: int = 2,
-    max_center_degree: int | None = None,
-) -> DataFrame:
-    """Common-neighbor link prediction over an undirected graph given as
-    distinct (u, v) pairs with u < v (:func:`interaction_pairs`' contract):
-    for every NON-adjacent pair (a, b), the number of shared neighbors —
-    the classic "people you may know" score (Liben-Nowell & Kleinberg 2003;
-    the reference's follow-graph domain is exactly where this runs).
-
-    Plan: expand to (center, leaf) both orientations, self-join on the
-    shared ``center`` to enumerate wedges (one shuffle keyed on center),
-    aggregate wedge counts per (a, b), anti-join the existing adjacency.
-    Wedge output through center v is C(deg(v), 2), so hub centers dominate
-    cost quadratically — ``max_center_degree`` drops hubs from wedge
-    GENERATION (the same quadratic-output guard as
-    ``ngram_jaccard_pairs.max_shingle_df``: a neighbor shared with everyone
-    ranks nobody).  The cap changes results, so the gate replays it in the
-    oracle — guarded AND value-checked.
-
-    Output: (a, b, common_neighbors), a < b non-adjacent pairs with
-    ``common_neighbors >= min_common``.
-    """
-    und = pairs.select(F.col("u").alias("center"), F.col("v").alias("leaf")).union(
-        pairs.select(F.col("v").alias("center"), F.col("u").alias("leaf"))
-    )
-    wedge_src = und
-    if max_center_degree is not None:
-        small = (
-            und.groupBy("center")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .where(F.col("_d") <= max_center_degree)
-            .select("center")
-        )
-        wedge_src = und.join(small, "center", "left_semi")
-    x = wedge_src.select("center", F.col("leaf").alias("a"))
-    y = wedge_src.select("center", F.col("leaf").alias("b"))
-    cand = (
-        x.join(y, "center")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
-        .where(F.col("common_neighbors") >= min_common)
-    )
-    adj = pairs.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    return cand.join(adj, ["a", "b"], "left_anti").select(
-        "a", "b", "common_neighbors"
-    )
-
-
-def link_prediction_sql(
-    min_common: int = 2, max_center_degree: int | None = None
-) -> str:
-    """DuckDB twin of :func:`link_prediction` over the event-derived
-    interaction graph (same ``und`` derivation as the x27 triangle oracle)."""
-    cap = (
-        f"""
-,small AS (
-  SELECT center FROM (
-    SELECT center, count(*) AS d FROM exp GROUP BY center) WHERE d <= {max_center_degree}
-),
-wsrc AS (SELECT e.* FROM exp e SEMI JOIN small s ON e.center = s.center)
-"""
-        if max_center_degree is not None
-        else ",wsrc AS (SELECT * FROM exp)"
-    )
-    return f"""
-WITH und AS (
-  SELECT DISTINCT least(a.user_id, b.user_id) AS u, greatest(a.user_id, b.user_id) AS v
-  FROM events a JOIN events b ON b.event_id = a.event_id + 1
-  WHERE a.user_id <> b.user_id
-),
-exp AS (SELECT u AS center, v AS leaf FROM und UNION ALL SELECT v, u FROM und)
-{cap},
-cand AS (
-  SELECT x.leaf AS a, y.leaf AS b, CAST(count(*) AS BIGINT) AS common_neighbors
-  FROM wsrc x JOIN wsrc y ON x.center = y.center AND x.leaf < y.leaf
-  GROUP BY x.leaf, y.leaf
-  HAVING count(*) >= {min_common}
-)
-SELECT c.a, c.b, c.common_neighbors
-FROM cand c ANTI JOIN und ON c.a = und.u AND c.b = und.v
-"""
-
-
 def funnel(
     events: DataFrame,
     steps: tuple[str, ...] = ("view", "click", "purchase"),

@@ -133,96 +133,6 @@ def ngram_jaccard_pairs(
     return out
 
 
-def containment_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram CONTAINMENT pairs (a < b): |A∩B| / min(|A|, |B|) — the
-    directional overlap score Jaccard misses.  A short document fully
-    quoted inside a long one has containment ≈ 1 but Jaccard ≈ |A|/|B|,
-    which a union-normalized threshold never fires on; excerpt/quote
-    detection in a training corpus needs this score (Broder's original
-    resemblance/containment split, "On the resemblance and containment of
-    documents", 1997).
-
-    Same bucketed shingle self-join as :func:`ngram_jaccard_pairs` — the
-    intersection count is keyed on the shingle so cost scales with bucket
-    sizes, never the cross product; ``max_shingle_df`` is the identical
-    hot-shingle output guard (see that docstring).  Score in exact integer
-    micro-units: ``n_inter * 1e6 div least(n_a, n_b)`` — engine-portable.
-
-    Output: (a, b, n_inter, n_a, n_b, containment_micro), a < b,
-    containment_micro ≥ threshold·1e6.
-    """
-    sh = word_shingles(df, n, text_col, id_col)
-    if max_shingle_df is not None:
-        sh = sh.cache()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    pair_sh = sh
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") <= max_shingle_df)
-            .select("shingle")
-        )
-        pair_sh = sh.join(rare, "shingle", "left_semi")
-    a = pair_sh.select(F.col("doc_id").alias("a"), "shingle")
-    b = pair_sh.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
-    out = (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .withColumn(
-            "containment_micro",
-            F.expr("(n_inter * 1000000) div least(n_a, n_b)"),
-        )
-        .where(F.col("containment_micro") >= int(threshold * 1_000_000))
-        .select("a", "b", "n_inter", "n_a", "n_b", "containment_micro")
-    )
-    if max_shingle_df is not None:
-        out._flockdb_caches = [sh]
-    return out
-
-
-def containment_pairs_sql(
-    threshold: float = 0.5, table: str = "documents", where: str = ""
-) -> str:
-    """DuckDB twin of :func:`containment_pairs` (word trigrams)."""
-    w = "string_split(text, ' ')"
-    trigrams = (
-        f"list_transform(range(1, length({w}) - 1), "
-        f"i -> concat_ws(' ', {w}[i], {w}[i+1], {w}[i+2]))"
-    )
-    return f"""
-WITH sub AS (SELECT doc_id, text FROM {table} {where}),
-sh AS (
-  SELECT doc_id, unnest(list_distinct({trigrams})) AS shingle FROM sub
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT a, b, n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
-       (n_inter * 1000000) // least(sa.n_sh, sb.n_sh) AS containment_micro
-FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-WHERE (n_inter * 1000000) // least(sa.n_sh, sb.n_sh) >= {int(threshold * 1_000_000)}
-"""
-
-
 def release_caches(df: DataFrame) -> None:
     """Unpersist any internal caches attached to a result frame by the
     functions in this module (safe only after the result is materialized).

@@ -10,6 +10,9 @@ Physical strategy:
 - brute-force top-k and near-dup pairs run as Arrow-native ``mapInArrow``
   with a numpy int64 GEMM against a broadcast matrix — the legitimate
   pandas-UDF use case (vector math), ~100× a per-element lambda chain.
+  The broadcast-state ANN top-k variants (brute force, PQ, IVF-PQ, int8,
+  binary) share one staged kernel, :func:`_ann_topk`; each supplies only
+  its scorer.
 - LSH-bucketed ANN keeps pure column expressions: the bucket join shrinks the
   candidate set so the per-row dot is cheap; this is the 100 TB path (the
   broadcast-matrix variants assume one side fits in memory).
@@ -149,6 +152,191 @@ def _gemm53(a, b) -> "np.ndarray":  # noqa: F821
     return (a.astype(np.float64) @ b.astype(np.float64)).astype(np.int64)
 
 
+def _sq_dist(x, c) -> "np.ndarray":  # noqa: F821
+    """Exact int64 squared distances (len(x), len(c)) between the rows of
+    ``x`` and ``c``: ``x² + c² − 2·x·c``, every term exact on the micro grid
+    (the cross term through :func:`_gemm53`)."""
+    return (x * x).sum(1)[:, None] + (c * c).sum(1)[None, :] - 2 * _gemm53(x, c.T)
+
+
+def _neg_dot(x, c) -> "np.ndarray":  # noqa: F821
+    """Cost matrix of the dot-product cell rule: nearest = largest dot."""
+    return -_gemm53(x, c.T)
+
+
+def _rowdot(a, b) -> "np.ndarray":  # noqa: F821
+    """Exact row-wise int64 dot of two (n, d) micro-grid matrices through a
+    float64 einsum (the same 2^53 exactness bound as :func:`_gemm53`)."""
+    import numpy as np
+
+    return np.einsum("ij,ij->i", a.astype(np.float64), b.astype(np.float64)).astype(np.int64)
+
+
+def _id_matrix(rows, id_col, vec_col) -> tuple:
+    """Collected (id, vector) rows → (ids, quantized matrix), ascending by
+    id, so every builder is insensitive to collection order (see
+    :func:`_collect_legs`)."""
+    import numpy as np
+    import pandas as pd
+
+    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    return ids[order], _np_quantize(pd.Series([r[vec_col] for r in rows]))[order]
+
+
+def _subspaces(n_subspaces: int, sub: int) -> list[slice]:
+    """Column slices of the PQ subspaces, ``sub`` components each."""
+    return [slice(m * sub, (m + 1) * sub) for m in range(n_subspaces)]
+
+
+def _pq_encode(x, cw, n_subspaces: int, sub: int) -> "np.ndarray":  # noqa: F821
+    """PQ codes (len(x), n_subspaces): per subspace, the nearest codeword of
+    each row (ties → the LOWER code — argmin takes the first minimum,
+    matching the oracles' (d2 ASC, code ASC) row_number)."""
+    import numpy as np
+
+    return np.stack(
+        [_sq_dist(x[:, sl], cw[:, sl]).argmin(axis=1) for sl in _subspaces(n_subspaces, sub)],
+        axis=1,
+    )
+
+
+def _pq_train(cw, train, n_subspaces: int, sub: int, rounds: int) -> "np.ndarray":  # noqa: F821
+    """Deterministic per-subspace Lloyd refinement of codebook ``cw`` on the
+    ``train`` rows (PQ trains on a sample by design; driver state stays a
+    bounded block).  Assignment is :func:`_pq_encode`'s rule; the centroid
+    update is the element-wise FLOOR integer mean (the oracles'
+    floor(sum/count)); an empty cluster keeps its previous codeword.
+    Subspaces are independent, so one encode per round serves all of them.
+    x113 and x118 gate this loop bit-for-bit."""
+    import numpy as np
+
+    cw = cw.copy()
+    for _ in range(rounds):
+        codes = _pq_encode(train, cw, n_subspaces, sub)
+        for m, sl in enumerate(_subspaces(n_subspaces, sub)):
+            for c in range(len(cw)):
+                members = train[codes[:, m] == c, sl]
+                if len(members):
+                    cw[c, sl] = np.floor_divide(members.sum(0), len(members))
+    return cw
+
+
+def _adc_tables(q, cw, n_subspaces: int, sub: int) -> "np.ndarray":  # noqa: F821
+    """ADC lookup tables (len(q), n_subspaces, len(cw)):
+    ``tables[i, m, c] = ‖q_i,m − cw_c,m‖²`` — driver-bounded, broadcast
+    with the codebooks."""
+    import numpy as np
+
+    return np.stack(
+        [_sq_dist(q[:, sl], cw[:, sl]) for sl in _subspaces(n_subspaces, sub)], axis=1
+    )
+
+
+def _adc(tables, t, codes) -> "np.ndarray":  # noqa: F821
+    """Asymmetric distances (Jégou et al.'s ADC): row j sums its codes'
+    entries of lookup table ``t[j]`` — ``Σ_m tables[t, m, codes[:, m]]``."""
+    return sum(tables[t, m, codes[:, m]] for m in range(codes.shape[1]))
+
+
+def _pairs(n_q: int, n: int) -> tuple:
+    """(query position, row index) of every pair of a dense (n_q, n) score
+    matrix, in its row-major order."""
+    import numpy as np
+
+    return np.repeat(np.arange(n_q), n), np.tile(np.arange(n), n_q)
+
+
+def _no_extras(qi, ri) -> dict:
+    return {}
+
+
+def _local_topk(q, nb, s, k: int, ascending: bool) -> "np.ndarray":  # noqa: F821
+    """Positions of each query's ``k`` best rows among the (query ``q``,
+    neighbor ``nb``, score ``s``) triples, in (query, rank) order: self
+    pairs (q == nb) excluded, score ascending or descending, exact-score
+    ties to the lower neighbor id.  Per batch this is exact for the global
+    ranking: every global top-k row is in its own batch's top-k."""
+    import numpy as np
+
+    live = np.flatnonzero(q != nb)
+    q, nb, s = q[live], nb[live], s[live]
+    order = np.lexsort((nb, s if ascending else -s, q))
+    qs = q[order]
+    starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+    pos = np.arange(len(qs)) - np.repeat(starts, np.diff(np.r_[starts, len(qs)]))
+    return live[order[pos < k]]
+
+
+def _rank_window(df: DataFrame, score_col: str, ascending: bool, k: int) -> DataFrame:
+    """The exact global ranking of a top-k family result: ``rank`` =
+    row_number per query_id by (score, neighbor_id ASC), kept ≤ ``k``."""
+    from pyspark.sql import Window
+
+    by = F.asc(score_col) if ascending else F.desc(score_col)
+    w = Window.partitionBy("query_id").orderBy(by, F.asc("neighbor_id"))
+    return df.withColumn("rank", F.row_number().over(w).cast("int")).where(
+        F.col("rank") <= k
+    )
+
+
+def _ann_topk(
+    corpus: DataFrame,
+    q_ids,
+    state,
+    score,
+    k: int,
+    score_col: str,
+    ascending: bool,
+    extras_schema: str = "",
+) -> DataFrame:
+    """The staged kernel of the ANN top-k family: one broadcast of the
+    prepared driver-side ``(q_ids, state)``, one Arrow pass over ``corpus``
+    (id first), and the exact global ranking.
+
+    Per Arrow batch, ``score(state, batch)`` returns (query positions, row
+    indices, int64 scores, extras) — dense or sparse candidate pairs —
+    and ``extras(qi, ri)`` maps the pairs that survive the batch's local
+    top-k (:func:`_local_topk`: self excluded, ties to the lower neighbor
+    id) to any extra output columns, so per-candidate work such as an exact
+    rerank dot is paid only for ≤ k rows per (query, batch).  The shuffle
+    then carries ≤ k rows per (query, partition) into one row_number window
+    (:func:`_rank_window`).  The broadcast rides on the result as
+    ``_flockdb_caches`` (dedup.release_caches convention: the caller
+    unpersists after materializing; ``Broadcast.unpersist`` keeps the
+    driver copy, so a re-execution lazily re-ships it).
+
+    Output: (query_id, neighbor_id, score_col[, extras], rank)."""
+    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, state))
+
+    def run(batches):
+        import pyarrow as pa
+
+        qids, st = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = _i64_arrow(batch.column(0))
+            qi, ri, s, extras = score(st, batch)
+            sel = _local_topk(qids[qi], ids[ri], s, k, ascending)
+            qi, ri = qi[sel], ri[sel]
+            yield pa.record_batch(
+                {
+                    "query_id": qids[qi],
+                    "neighbor_id": ids[ri],
+                    score_col: s[sel],
+                    **extras(qi, ri),
+                }
+            )
+
+    scored = corpus.mapInArrow(
+        run, f"query_id long, neighbor_id long, {score_col} long{extras_schema}"
+    )
+    out = _rank_window(scored, score_col, ascending, k)
+    out._flockdb_caches = [bc]
+    return out
+
+
 def brute_force_topk(
     emb: DataFrame, query_ids: list[int], k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding",
     emit_vectors: bool = False,
@@ -174,57 +362,27 @@ def brute_force_topk(
     ``query_ids`` rows of ``emb``.
 
     Output: (query_id, neighbor_id, dot_micro2[, nv], rank)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
     if query_rows is None:
-        q_rows = emb.where(F.col(id_col).isin([int(i) for i in query_ids])).select(id_col, vec_col).collect()
-        query_rows = [(r[id_col], r[vec_col]) for r in q_rows]
-    q_ids = np.array([i for i, _ in query_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([v for _, v in query_rows]))
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_mat))
+        leg = emb.where(F.col(id_col).isin([int(i) for i in query_ids]))
+        query_rows = [
+            (r[id_col], r[vec_col]) for r in _collect_legs([leg.select(id_col, vec_col)])[0]
+        ]
+    q_ids, q_mat = _id_matrix(query_rows, 0, 1)
 
-    def score(batches):
-        import pyarrow as pa
+    def score(qm, batch):
+        v = _quantize_arrow(batch.column(1))
+        qi, ri = _pairs(len(qm), len(v))
 
-        qids, qmat = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            e_ids = _i64_arrow(batch.column(0))
-            e_mat = _quantize_arrow(batch.column(1))
-            scores = _gemm53(e_mat, qmat.T)  # (n, n_q) int64 — exact
-            qcol = np.repeat(qids, len(e_ids))
-            ncol = np.tile(e_ids, len(qids))
-            icol = np.tile(np.arange(len(e_ids), dtype=np.int64), len(qids))
-            dcol = scores.T.reshape(-1)
-            mask = qcol != ncol
-            qcol, ncol, dcol, icol = qcol[mask], ncol[mask], dcol[mask], icol[mask]
-            # local top-k per query: exact global result after the final
-            # window — lexsort on (query, -dot, neighbor), take first k of
-            # each query run
-            order = np.lexsort((ncol, -dcol, qcol))
-            qcol, ncol, dcol, icol = qcol[order], ncol[order], dcol[order], icol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            rank = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = rank < k
-            cols = {"query_id": qcol[topk], "neighbor_id": ncol[topk], "dot_micro2": dcol[topk]}
-            if emit_vectors:
-                sel = e_mat[icol[topk]]  # (n_out, dims) int64, micro grid
-                n_out, dims_ = sel.shape
-                cols["nv"] = pa.ListArray.from_arrays(
-                    pa.array(np.arange(0, (n_out + 1) * dims_, dims_, dtype=np.int32)),
-                    pa.array(sel.reshape(-1)),
-                )
-            yield pa.record_batch(cols)
+        def vectors(qi, ri):
+            return {"nv": _list_array(v[ri])}  # (n_out, dims) int64, micro grid
 
-    out_schema = "query_id long, neighbor_id long, dot_micro2 long" + (
-        ", nv array<bigint>" if emit_vectors else ""
+        s = _gemm53(qm, v.T).reshape(-1)  # (n_q, n) int64 — exact
+        return qi, ri, s, vectors if emit_vectors else _no_extras
+
+    return _ann_topk(
+        emb.select(id_col, vec_col), q_ids, q_mat, score, k, "dot_micro2", False,
+        ", nv array<bigint>" if emit_vectors else "",
     )
-    scored = emb.select(id_col, vec_col).mapInArrow(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
 
 
 def neardup_pairs(
@@ -249,11 +407,7 @@ def neardup_pairs(
             f"neardup_pairs is the exact broadcast baseline, capped at "
             f"{max_rows} vectors; use lsh_neardup_pairs for larger corpora"
         )
-    ids = np.array([r[id_col] for r in all_rows], dtype=np.int64)
-    import pandas as pd
-
-    mat = _np_quantize(pd.Series([r[vec_col] for r in all_rows]))
-    bc = emb.sparkSession.sparkContext.broadcast((ids, mat))
+    bc = emb.sparkSession.sparkContext.broadcast(_id_matrix(all_rows, id_col, vec_col))
     thresh = int(threshold * MICRO * MICRO)
 
     def score(batches):
@@ -447,11 +601,18 @@ def _np_sign(
     table (any zero chunk in the masked XOR — a SWAR test) and emit each
     pair exactly once: first-collision emission, the standard multi-table
     LSH dedup, replacing a global ``dropDuplicates`` shuffle with a local
-    vectorized compare."""
+    vectorized compare.
+
+    ``planes=0`` is the degenerate one-bucket, one-table signature (an
+    exhaustive comparison), kept as plain column expressions."""
     import numpy as np
 
     if carry_packed_buckets and planes * n_tables > 64:
         raise ValueError("packed buckets need planes * n_tables <= 64")
+    if planes == 0:
+        return emb.select(
+            F.col(id_col).alias(out_id), quantized(vec_col).alias(out_vec)
+        ).select(out_id, out_vec, F.lit(0).alias("tbl"), F.lit(0).cast("long").alias("bucket"))
     spark = emb.sparkSession
     # table_offset shifts only the SEED (global table index): pass p of a
     # multi-pass run signs with tables [p·L, (p+1)·L) of the uncapped run;
@@ -842,23 +1003,14 @@ def lsh_neardup_pairs(
             {"a": cat(chunks_a), "b": cat(chunks_b), "dot_micro2": cat(chunks_d)}
         )
 
-    # corpus signing is the vectorized numpy path (read once, no cache);
-    # planes=0 keeps the degenerate one-bucket column expression
+    # corpus signing is the vectorized numpy path (read once, no cache)
     def one_pass(table_offset: int) -> DataFrame:
-        if planes == 0:
-            sig = emb.select(
-                F.col(id_col).alias("_id"), quantized(vec_col).alias("_v")
-            ).select(
-                "_id", "_v",
-                F.lit(0).alias("tbl"), F.lit(0).cast("long").alias("bucket"),
-            )
-        else:
-            sig = _np_sign(
-                emb, id_col, vec_col, dims, planes, hash_mode, n_tables,
-                "_id", "_v",
-                carry_packed_buckets=n_tables > 1 and planes * n_tables <= 64,
-                table_offset=table_offset,
-            )
+        sig = _np_sign(
+            emb, id_col, vec_col, dims, planes, hash_mode, n_tables,
+            "_id", "_v",
+            carry_packed_buckets=n_tables > 1 and planes * n_tables <= 64,
+            table_offset=table_offset,
+        )
         if persist_index:
             # the signed corpus is the index (see lsh_ann_topk)
             sig = sig.cache()
@@ -908,10 +1060,8 @@ def ivf_ann_topk(
     Output: (query_id, neighbor_id, dot_micro2, rank) — same contract as
     ``brute_force_topk`` / ``lsh_ann_topk``."""
     import numpy as np
-    from pyspark.sql import Window
 
     qids = [int(i) for i in query_ids]
-    import pandas as pd
 
     # ONE construction job (r11, guide §2.4/§5): centroids (the n_centroids
     # smallest ids) and the query vectors ride a single union collect, and
@@ -929,13 +1079,10 @@ def ivf_ann_topk(
             emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col),
         ]
     )
-    # centroid columns ordered by ascending cid: a STABLE argsort of -dot
+    # centroid rows ordered by ascending cid: argmin of the negated dot
     # then breaks exact-dot ties toward the lower cid, reproducing the
     # (cdot DESC, cid ASC) assignment order of the SQL oracle
-    c_ids = np.array([r[id_col] for r in cent_rows], dtype=np.int64)
-    order = np.argsort(c_ids, kind="stable")
-    c_ids = c_ids[order]
-    c_mat = _np_quantize(pd.Series([r[vec_col] for r in cent_rows]))[order]
+    c_ids, c_mat = _id_matrix(cent_rows, id_col, vec_col)
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat))
 
     def assign(batches):
@@ -948,10 +1095,9 @@ def ivf_ann_topk(
                 continue
             ids = _i64_arrow(batch.column(0))
             v = _quantize_arrow(batch.column(1))
-            s = _gemm53(v, cmat.T)  # (n, n_centroids) int64 — exact
-            ranked = np.argsort(-s, axis=1, kind="stable")  # ties → lower cid
+            cell = _neg_dot(v, cmat).argmin(axis=1)  # ties → lower cid
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids), _list_array(v), pa.array(cids[ranked[:, 0]])],
+                [pa.array(ids), _list_array(v), pa.array(cids[cell])],
                 names=["vid", "ev", "cell"],
             )
 
@@ -969,9 +1115,8 @@ def ivf_ann_topk(
     # (cdot DESC, cid ASC) tie order — so each query's probe-cell set is
     # bit-identical to the one the old second corpus pass produced
     if q_rows:
-        q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-        q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))
-        ranked_q = np.argsort(-_gemm53(q_mat, c_mat.T), axis=1, kind="stable")
+        q_ids, q_mat = _id_matrix(q_rows, id_col, vec_col)
+        ranked_q = np.argsort(_neg_dot(q_mat, c_mat), axis=1, kind="stable")
         n_p = min(n_probe, len(c_ids))
         probe_rows = [
             (int(q_ids[i]), [int(x) for x in q_mat[i]], int(c_ids[ranked_q[i, p]]))
@@ -990,8 +1135,7 @@ def ivf_ann_topk(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", dot_q(F.col("qv"), F.col("ev")).alias("dot_micro2"))
     )
-    w_k = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return rerank.withColumn("rank", F.row_number().over(w_k).cast("int")).where(F.col("rank") <= k)
+    return _rank_window(rerank, "dot_micro2", False, k)
 
 
 def pq_ann_topk(
@@ -1039,10 +1183,6 @@ def pq_ann_topk(
     Output: (query_id, neighbor_id, adist[, dot_micro2], rank) — adist ASC
     (smaller is closer), ties broken by neighbor_id; rank ≤ k, self
     excluded."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
     sub = dims // n_subspaces
     qids = [int(i) for i in query_ids]
 
@@ -1056,111 +1196,31 @@ def pq_ann_topk(
         legs.append(emb.orderBy(id_col).limit(n_train).select(id_col, vec_col))
     legs.append(emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col))
     collected = _collect_legs(legs)
-    cw_rows, q_rows = collected[0], collected[-1]
-    order = np.argsort(np.array([r[id_col] for r in cw_rows]), kind="stable")
-    cw = _np_quantize(pd.Series([r[vec_col] for r in cw_rows]))[order]  # (C, dims)
-
+    cw = _id_matrix(collected[0], id_col, vec_col)[1]  # (C, dims)
     if train_rounds > 0:
-        # deterministic per-subspace Lloyd refinement on the n_train
-        # smallest ids (PQ trains on a sample by design; driver state stays
-        # a bounded T×dims block).  Assignment ties fall to the lower code
-        # (argmin-first); centroid update is the element-wise FLOOR integer
-        # mean (matches the oracle's floor(sum/count)); an empty cluster
-        # keeps its previous codeword.  x113 gates this loop bit-for-bit.
-        cw = cw.copy()
-        t_rows = collected[1]
-        t_order = np.argsort(np.array([r[id_col] for r in t_rows]), kind="stable")
-        tmat = _np_quantize(pd.Series([r[vec_col] for r in t_rows]))[t_order]
-        sub_w = dims // n_subspaces
-        for m in range(n_subspaces):
-            xs = tmat[:, m * sub_w : (m + 1) * sub_w]
-            cs = cw[:, m * sub_w : (m + 1) * sub_w].copy()
-            for _ in range(train_rounds):
-                d2 = (
-                    (xs * xs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(xs, cs.T)
-                )
-                codes = np.argmin(d2, axis=1)
-                for c in range(cs.shape[0]):
-                    members = xs[codes == c]
-                    if len(members):
-                        cs[c] = np.floor_divide(members.sum(0), len(members))
-            cw[:, m * sub_w : (m + 1) * sub_w] = cs
+        train = _id_matrix(collected[1], id_col, vec_col)[1]
+        cw = _pq_train(cw, train, n_subspaces, sub, train_rounds)
+    q_ids, q_mat = _id_matrix(collected[-1], id_col, vec_col)
+    # ADC tables — driver-bounded |Q|·M·C int64s (5·8·16 here)
+    tables = _adc_tables(q_mat, cw, n_subspaces, sub)
 
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))  # (Q, dims)
+    def score(st, batch):
+        cwm, tabs, qm = st
+        v = _quantize_arrow(batch.column(1))
+        qi, ri = _pairs(len(qm), len(v))
 
-    # ADC tables[q, m, c] = Σ_d (q_d − cw_c_d)² over subspace m — driver-
-    # bounded |Q|·M·C int64s (5·8·16 here), broadcast with the codebooks
-    C = cw.shape[0]
-    tables = np.empty((len(q_ids), n_subspaces, C), dtype=np.int64)
-    for m in range(n_subspaces):
-        qs = q_mat[:, m * sub : (m + 1) * sub]
-        cs = cw[:, m * sub : (m + 1) * sub]
-        # (q − c)² = q² + c² − 2qc, every term exact in int64 on the grid
-        tables[:, m, :] = (
-            (qs * qs).sum(1)[:, None]
-            + (cs * cs).sum(1)[None, :]
-            - 2 * _gemm53(qs, cs.T)
-        )
-    bc = emb.sparkSession.sparkContext.broadcast((cw, q_ids, tables, q_mat))
+        def dots(qi, ri):
+            # exact dot for the selected rows only: ≤ k·|Q| (vector,
+            # query) pairs, never the n×|Q| brute GEMM
+            return {"dot_micro2": _rowdot(v[ri], qm[qi])}
 
-    def score(batches):
-        import pyarrow as pa
+        s = _adc(tabs, qi, _pq_encode(v, cwm, n_subspaces, sub)[ri])
+        return qi, ri, s, dots if emit_dot else _no_extras
 
-        cwm, qids_np, tabs, qm = bc.value
-        qpos_of = {int(q): i for i, q in enumerate(qids_np)}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            v = _quantize_arrow(batch.column(1))
-            n = len(ids)
-            # encode: per subspace, argmin distance to the codewords (ties
-            # fall to the LOWER code — np.argmin takes the first minimum,
-            # matching the oracle's (d2 ASC, code ASC) row_number)
-            adist = np.zeros((len(qids_np), n), dtype=np.int64)
-            for m in range(n_subspaces):
-                xs = v[:, m * sub : (m + 1) * sub]
-                cs = cwm[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    (xs * xs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(xs, cs.T)
-                )  # (n, C)
-                codes = np.argmin(d2, axis=1)
-                adist += tabs[:, m, codes]  # (Q, n) lookup-sum — the ADC
-            qcol = np.repeat(qids_np, n)
-            ncol = np.tile(ids, len(qids_np))
-            icol = np.tile(np.arange(n, dtype=np.int64), len(qids_np))
-            dcol = adist.reshape(-1)
-            mask = qcol != ncol
-            qcol, ncol, dcol, icol = qcol[mask], ncol[mask], dcol[mask], icol[mask]
-            # local top-k per query (adist ASC, neighbor ASC)
-            order = np.lexsort((ncol, dcol, qcol))
-            qcol, ncol, dcol, icol = qcol[order], ncol[order], dcol[order], icol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            pos = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = pos < k
-            cols = {"query_id": qcol[topk], "neighbor_id": ncol[topk], "adist": dcol[topk]}
-            if emit_dot:
-                # exact dot for the selected rows only: row-wise einsum over
-                # ≤ k·|Q| (vector, query) pairs — exact in float64 on the
-                # micro grid (same 2^53 bound as _gemm53)
-                qsel = np.array([qpos_of[int(q)] for q in qcol[topk]], dtype=np.int64)
-                vsel = v[icol[topk]].astype(np.float64)
-                cols["dot_micro2"] = np.einsum(
-                    "ij,ij->i", vsel, qm[qsel].astype(np.float64)
-                ).astype(np.int64)
-            yield pa.record_batch(cols)
-
-    out_schema = "query_id long, neighbor_id long, adist long" + (
-        ", dot_micro2 long" if emit_dot else ""
+    return _ann_topk(
+        emb.select(id_col, vec_col), q_ids, (cw, tables, q_mat), score, k, "adist", True,
+        ", dot_micro2 long" if emit_dot else "",
     )
-    scored = emb.select(id_col, vec_col).mapInArrow(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
 
 
 def pq_ann_sql(
@@ -1261,7 +1321,7 @@ def pq_rerank_topk(
 
     Output: (query_id, neighbor_id, dot_micro2, rank) — the exact-dot
     contract shared by brute_force_topk / lsh_ann_topk / ivf_ann_topk."""
-    from pyspark.sql import Window
+    from .dedup import carry_caches
 
     qids = [int(i) for i in query_ids]
     # the exact dot rides the ADC pass itself (emit_dot — computed for the
@@ -1272,9 +1332,11 @@ def pq_rerank_topk(
     cand = pq_ann_topk(
         emb, qids, k=candidates, id_col=id_col, vec_col=vec_col, emit_dot=True,
         **pq_kwargs,
-    ).select("query_id", "neighbor_id", "dot_micro2")
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return cand.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
+    )
+    out = _rank_window(
+        cand.select("query_id", "neighbor_id", "dot_micro2"), "dot_micro2", False, k
+    )
+    return carry_caches(out, cand)
 
 
 def pq_rerank_sql(
@@ -1444,8 +1506,6 @@ def lsh_ann_topk(
     shapes (e.g. the single-table planes=6 n_probe=1 L=1 minimum, recall
     0.08) remain available explicitly when candidate volume must be
     minimal."""
-    from pyspark.sql import Window
-
     if planes is None:
         # callers that already counted the corpus (e.g. hybrid_rrf_topk's
         # leg selector) pass n_vectors so the auto shape costs zero jobs
@@ -1472,16 +1532,9 @@ def lsh_ann_topk(
     # corpus signing: vectorized numpy GEMM path (the query side below stays
     # in column expressions — it is broadcast-tiny and needs the per-plane
     # margins for multi-probe)
-    if planes == 0:
-        sig = emb.select(
-            F.col(id_col).alias("neighbor_id"), quantized(vec_col).alias("ev")
-        ).select(
-            "neighbor_id", "ev", F.lit(0).alias("tbl"), F.lit(0).cast("long").alias("bucket")
-        )
-    else:
-        sig = _np_sign(
-            emb, id_col, vec_col, dims, planes, hash_mode, n_tables, "neighbor_id", "ev"
-        )
+    sig = _np_sign(
+        emb, id_col, vec_col, dims, planes, hash_mode, n_tables, "neighbor_id", "ev"
+    )
     if persist_index:
         # the signed corpus IS the index: persisting it is the production
         # deployment shape (sign once at ingest, serve many queries) and the
@@ -1536,8 +1589,7 @@ def lsh_ann_topk(
         .dropDuplicates(["query_id", "neighbor_id"])
         .select("query_id", "neighbor_id", dot_q(F.col("qv"), F.col("ev")).alias("dot_micro2"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(F.col("rank") <= k)
+    return _rank_window(scored, "dot_micro2", False, k)
 
 
 def _np_int8(mat_micro):
@@ -1576,55 +1628,25 @@ def int8_ann_topk(
     pruning.  Output: (query_id, neighbor_id, dot_rec_micro2, rank).
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
 
-    q_rows = (
-        emb.where(F.col(id_col).isin([int(i) for i in query_ids]))
-        .select(id_col, vec_col)
-        .collect()
+    leg = emb.where(F.col(id_col).isin([int(i) for i in query_ids]))
+    q_ids, q_mat = _id_matrix(
+        _collect_legs([leg.select(id_col, vec_col)])[0], id_col, vec_col
     )
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q8, q_amax = _np_int8(_np_quantize(pd.Series([r[vec_col] for r in q_rows])))
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q8, q_amax))
 
-    def score(batches):
-        import pyarrow as pa
+    def score(st, batch):
+        q8, qam = st
+        e8, e_amax = _np_int8(_quantize_arrow(batch.column(1)))
+        sdot = _gemm53(q8, e8.T)  # (n_q, n) int64 code dot — exact
+        # rescale to micro^2; trunc-toward-zero to match SQL `//`
+        num = sdot * qam[:, None] * e_amax[None, :]
+        rec = np.sign(num) * (np.abs(num) // (127 * 127))
+        qi, ri = _pairs(len(q8), len(e8))
+        return qi, ri, rec.reshape(-1), _no_extras
 
-        qids, qmat, qam = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            e_ids = _i64_arrow(batch.column(0))
-            e8, e_amax = _np_int8(_quantize_arrow(batch.column(1)))
-            sdot = _gemm53(e8, qmat.T)  # (n, n_q) int64 code dot — exact
-            # rescale to micro^2; trunc-toward-zero to match SQL `//`
-            num = sdot * e_amax[:, None] * qam[None, :]
-            rec = np.sign(num) * (np.abs(num) // (127 * 127))
-            qcol = np.repeat(qids, len(e_ids))
-            ncol = np.tile(e_ids, len(qids))
-            dcol = rec.T.reshape(-1)
-            mask = qcol != ncol
-            qcol, ncol, dcol = qcol[mask], ncol[mask], dcol[mask]
-            # local top-k per query (see brute_force_topk.score)
-            order = np.lexsort((ncol, -dcol, qcol))
-            qcol, ncol, dcol = qcol[order], ncol[order], dcol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            rank = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = rank < k
-            yield pa.record_batch(
-                {"query_id": qcol[topk], "neighbor_id": ncol[topk], "dot_rec_micro2": dcol[topk]}
-            )
-
-    scored = emb.select(id_col, vec_col).mapInArrow(
-        score, "query_id long, neighbor_id long, dot_rec_micro2 long"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_rec_micro2"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
+    return _ann_topk(
+        emb.select(id_col, vec_col), q_ids, _np_int8(q_mat), score, k,
+        "dot_rec_micro2", False,
     )
 
 
@@ -1738,7 +1760,6 @@ def semantic_assign(
     (K > 16) — both bit-identical.  tools/scaleproof.py reports this
     stage's cell distribution and Σ|cell|² per SF."""
     import numpy as np
-    import pandas as pd
 
     if n_clusters is None:
         n = emb.count() if n_vectors is None else int(n_vectors)
@@ -1747,8 +1768,7 @@ def semantic_assign(
     seed_rows = (
         emb.orderBy(id_col).limit(n_clusters).select(id_col, vec_col).collect()
     )
-    seed_rows.sort(key=lambda r: r[id_col])
-    c_mat = _np_quantize(pd.Series([r[vec_col] for r in seed_rows]))
+    c_mat = _id_matrix(seed_rows, id_col, vec_col)[1]
 
     use_gemm = assign == "gemm" or (assign == "auto" and c_mat.shape[0] > 16)
     if use_gemm:
@@ -1759,21 +1779,15 @@ def semantic_assign(
             import pyarrow as pa
 
             cmat = bc.value
-            cnorm = (cmat * cmat).sum(axis=1)  # |c|^2, int64-exact
             for batch in batches:
                 n_rows = batch.num_rows
                 if n_rows == 0:
                     continue
                 ids = _i64_arrow(batch.column(0))
                 v = _quantize_arrow(batch.column(1))
-                # |x-c|^2 = |x|^2 - 2 x·c + |c|^2, all int64-exact;
                 # argmin ties -> first occurrence = lowest cid (cmat rows
                 # are cid-ascending) — same rule as the expression path
-                d = (
-                    (v * v).sum(axis=1)[:, None]
-                    - 2 * _gemm53(v, cmat.T)
-                    + cnorm[None, :]
-                )
+                d = _sq_dist(v, cmat)
                 best = d.argmin(axis=1)
                 yield pa.record_batch(
                     {
@@ -1945,15 +1959,13 @@ def kmeans_fit(
     rounds: (cluster, dim, centroid_micro, n_vectors).
     """
     import numpy as np
-    import pandas as pd
 
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     spark = emb.sparkSession
     seed_rows = emb.orderBy(id_col).limit(n_clusters).select(id_col, vec_col).collect()
-    order = np.argsort(np.array([r[id_col] for r in seed_rows], dtype=np.int64), kind="stable")
-    c_mat = _np_quantize(pd.Series([r[vec_col] for r in seed_rows]))[order]
-    c_ids = np.arange(len(order), dtype=np.int64)
+    c_mat = _id_matrix(seed_rows, id_col, vec_col)[1]
+    c_ids = np.arange(len(c_mat), dtype=np.int64)
 
     quant = emb.select(id_col, quantized(vec_col).alias("ev"))
     out_schema = "cluster long, dim int, centroid_micro long, n_vectors long"
@@ -1969,7 +1981,6 @@ def kmeans_fit(
             import pyarrow as pa
 
             cids, cmat = bc.value
-            cnorm = (cmat * cmat).sum(axis=1)  # |c|^2, int64-exact
             for batch in batches:
                 n = batch.num_rows
                 if n == 0:
@@ -1978,9 +1989,8 @@ def kmeans_fit(
                     batch.column(batch.schema.get_field_index("ev")), n
                 )
                 dims = v.shape[1]
-                # argmin |x-c|^2 == argmin(|c|^2 - 2 x·c); ties -> first
-                # (lowest cid: cmat rows are cid-ascending)
-                best = (cnorm[None, :] - 2 * _gemm53(v, cmat.T)).argmin(axis=1)
+                # ties -> first (lowest cid: cmat rows are cid-ascending)
+                best = _sq_dist(v, cmat).argmin(axis=1)
                 uniq = np.unique(best)
                 sums = np.stack([v[best == b].sum(axis=0) for b in uniq])
                 cnts = np.array([(best == b).sum() for b in uniq], dtype=np.int64)
@@ -2109,6 +2119,49 @@ FROM d QUALIFY rank <= {top_k}
 """
 
 
+def _ivfpq_topk(
+    emb: DataFrame,
+    q_ids,
+    q_mat,
+    c_mat,
+    cw,
+    cell_cost,
+    k: int,
+    n_probe: int,
+    n_subspaces: int,
+    sub: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The serving pass shared by the IVF-PQ builders: each query probes
+    its ``n_probe`` cheapest cells under ``cell_cost`` (a (rows, cells)
+    cost matrix; ties → the lower cell by stable argsort), and every corpus
+    vector, assigned to its own cheapest cell, is ranked in the probed cells
+    by ADC over the PQ codes of its residual against that cell's centroid.
+
+    ADC tables are per (query, probed cell): ‖(q − c_cell)_m − cw_c,m‖² —
+    driver-bounded |Q|·n_probe·M·C int64s."""
+    import numpy as np
+
+    q_mat = q_mat.reshape(len(q_ids), c_mat.shape[1])  # (0, dims) when no query matched
+    probe = np.argsort(cell_cost(q_mat, c_mat), axis=1, kind="stable")[:, :n_probe]
+    resid = (q_mat[:, None, :] - c_mat[probe]).reshape(-1, c_mat.shape[1])
+    tables = _adc_tables(resid, cw, n_subspaces, sub)  # row q·n_p + p
+
+    def score(st, batch):
+        cmat, cwm, pidx, tabs = st
+        v = _quantize_arrow(batch.column(1))
+        cell = cell_cost(v, cmat).argmin(axis=1)  # ties → lower cell
+        codes = _pq_encode(v - cmat[cell], cwm, n_subspaces, sub)
+        qi, pi, ri = np.nonzero(pidx[:, :, None] == cell[None, None, :])
+        return qi, ri, _adc(tabs, qi * pidx.shape[1] + pi, codes[ri]), _no_extras
+
+    return _ann_topk(
+        emb.select(id_col, vec_col), q_ids, (c_mat, cw, probe, tables), score, k,
+        "adist", True,
+    )
+
+
 def ivfpq_ann_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -2147,11 +2200,6 @@ def ivfpq_ann_topk(
 
     Output: (query_id, neighbor_id, adist, rank) — adist ASC, ties by
     neighbor_id; rank ≤ k, self excluded."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    sub = dims // n_subspaces
     qids = [int(i) for i in query_ids]
 
     # ONE construction job (r11): the seed head and the query vectors ride
@@ -2168,105 +2216,17 @@ def ivfpq_ann_topk(
             f"{n_centroids + n_codes} vectors to seed both quantization "
             f"levels; corpus has {len(head)}"
         )
-    h_ids = np.array([r[id_col] for r in head], dtype=np.int64)
-    order = np.argsort(h_ids, kind="stable")
-    h_mat = _np_quantize(pd.Series([r[vec_col] for r in head]))[order]
+    h_mat = _id_matrix(head, id_col, vec_col)[1]
     c_mat = h_mat[:n_centroids]  # coarse centroids, row index == ascending cid
     seed_mat = h_mat[n_centroids : n_centroids + n_codes]
     # codebook = the seeds' residuals w.r.t. their own nearest cell
-    # (dot DESC, cid ASC — argsort stable picks the lower cid on ties)
-    s_cell = np.argsort(-_gemm53(seed_mat, c_mat.T), axis=1, kind="stable")[:, 0]
-    cw = seed_mat - c_mat[s_cell]  # (n_codes, dims), code id == row index
-
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))
-    # each query's n_probe nearest cells, then its per-(cell, m) ADC table:
-    # tab[q, p, m, c] = ||(q − c_cell)_m − cw_c_m||² — driver-bounded
-    # |Q|·n_probe·M·C int64s
-    probe_idx = np.argsort(-_gemm53(q_mat, c_mat.T), axis=1, kind="stable")[:, :n_probe]
-    tables = np.empty((len(q_ids), n_probe, n_subspaces, n_codes), dtype=np.int64)
-    for qi in range(len(q_ids)):
-        for pi in range(n_probe):
-            rq = q_mat[qi] - c_mat[probe_idx[qi, pi]]
-            for m in range(n_subspaces):
-                rm = rq[m * sub : (m + 1) * sub]
-                cm = cw[:, m * sub : (m + 1) * sub]
-                tables[qi, pi, m, :] = (
-                    (rm * rm).sum() + (cm * cm).sum(1) - 2 * (cm @ rm)
-                )
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (c_mat, cw, q_ids, probe_idx, tables)
+    # (dot DESC, cid ASC — argmin of the negated dot picks the lower cid)
+    cw = seed_mat - c_mat[_neg_dot(seed_mat, c_mat).argmin(axis=1)]
+    q_ids, q_mat = _id_matrix(q_rows, id_col, vec_col)
+    return _ivfpq_topk(
+        emb, q_ids, q_mat, c_mat, cw, _neg_dot, k, n_probe, n_subspaces,
+        dims // n_subspaces, id_col, vec_col,
     )
-
-    def score(batches):
-        import pyarrow as pa
-
-        cmat, cwm, qids_np, pidx, tabs = bc.value
-        n_q, n_p = pidx.shape
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            v = _quantize_arrow(batch.column(1))
-            n = len(ids)
-            # coarse assignment (ties → lower cid) and residual encode
-            cell = np.argsort(-_gemm53(v, cmat.T), axis=1, kind="stable")[:, 0]
-            resid = v - cmat[cell]
-            codes = np.empty((n, n_subspaces), dtype=np.int64)
-            for m in range(n_subspaces):
-                rs = resid[:, m * sub : (m + 1) * sub]
-                cs = cwm[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    (rs * rs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(rs, cs.T)
-                )
-                codes[:, m] = np.argmin(d2, axis=1)  # ties → lower code
-            qout, nout, dout = [], [], []
-            for qi in range(n_q):
-                for pi in range(n_p):
-                    sel = np.nonzero(
-                        (cell == pidx[qi, pi]) & (ids != qids_np[qi])
-                    )[0]
-                    if not sel.size:
-                        continue
-                    ad = np.zeros(sel.size, dtype=np.int64)
-                    for m in range(n_subspaces):
-                        ad += tabs[qi, pi, m, codes[sel, m]]
-                    qout.append(np.full(sel.size, qids_np[qi], dtype=np.int64))
-                    nout.append(ids[sel])
-                    dout.append(ad)
-            if not qout:
-                continue
-            qcol = np.concatenate(qout)
-            ncol = np.concatenate(nout)
-            dcol = np.concatenate(dout)
-            # local top-k per query (adist ASC, neighbor ASC)
-            order = np.lexsort((ncol, dcol, qcol))
-            qcol, ncol, dcol = qcol[order], ncol[order], dcol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            pos = np.arange(len(qcol)) - np.repeat(
-                starts, np.diff(np.r_[starts, len(qcol)])
-            )
-            topk = pos < k
-            yield pa.record_batch(
-                {"query_id": qcol[topk], "neighbor_id": ncol[topk], "adist": dcol[topk]}
-            )
-
-    scored = emb.select(id_col, vec_col).mapInArrow(
-        score, "query_id long, neighbor_id long, adist long"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    out = scored.withColumn("rank", F.row_number().over(w).cast("int")).where(
-        F.col("rank") <= k
-    )
-    # the _flockdb_caches release convention (dedup.py): the caller
-    # unpersists after materializing, so repeated index builds in one
-    # session don't accumulate executor-side broadcast blocks (ADVICE r8);
-    # Broadcast.unpersist keeps the driver copy, so a re-execution of the
-    # same DataFrame lazily re-ships it
-    out._flockdb_caches = [bc]
-    return out
 
 
 def ivfpq_ann_sql(
@@ -2785,8 +2745,6 @@ def ivfpq_trained_ann_topk(
 
     Output: (query_id, neighbor_id, adist, rank) — x115's contract."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
 
     sub = dims // n_subspaces
     qids = [int(i) for i in query_ids]
@@ -2799,121 +2757,32 @@ def ivfpq_trained_ann_topk(
     by_c: dict[int, dict[int, int]] = {}
     for r in cent_rows:
         by_c.setdefault(int(r["cluster"]), {})[int(r["dim"])] = int(r["centroid_micro"])
-    c_ids = np.array(sorted(by_c), dtype=np.int64)
     c_mat = np.array(
-        [[by_c[c][d] for d in range(dims)] for c in c_ids], dtype=np.int64
+        [[by_c[c][d] for d in range(dims)] for c in sorted(by_c)], dtype=np.int64
     )
 
-    def cells_of(mat):
-        # argmin ||x−c||² == argmin(|c|² − 2x·c); ties → first (lower cid)
-        cn = (c_mat * c_mat).sum(1)
-        return (cn[None, :] - 2 * _gemm53(mat, c_mat.T)).argmin(axis=1)
-
-    # level 2: residual codebooks, Lloyd-refined on the n_train sample
-    t_rows = (
-        emb.orderBy(id_col).limit(max(n_train, n_codes)).select(id_col, vec_col).collect()
+    # level 2: residual codebooks, Lloyd-refined on the n_train sample; the
+    # training rows and the query vectors ride ONE construction job
+    t_rows, q_rows = _collect_legs(
+        [
+            emb.orderBy(id_col).limit(max(n_train, n_codes)).select(id_col, vec_col),
+            emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col),
+        ]
     )
     if len(t_rows) < n_codes:
         raise ValueError(
             f"ivfpq_trained_ann_topk needs >= n_codes = {n_codes} vectors "
             f"to seed the residual codebooks; corpus has {len(t_rows)}"
         )
-    t_order = np.argsort(np.array([r[id_col] for r in t_rows], dtype=np.int64), kind="stable")
-    tmat = _np_quantize(pd.Series([r[vec_col] for r in t_rows]))[t_order]
-    tres = tmat - c_mat[cells_of(tmat)]
-    cw = tres[:n_codes].copy()
-    for m in range(n_subspaces):
-        xs = tres[:n_train, m * sub : (m + 1) * sub]
-        cs = cw[:, m * sub : (m + 1) * sub].copy()
-        for _ in range(train_rounds):
-            d2 = (
-                (xs * xs).sum(1)[:, None]
-                + (cs * cs).sum(1)[None, :]
-                - 2 * _gemm53(xs, cs.T)
-            )
-            codes = np.argmin(d2, axis=1)
-            for c in range(cs.shape[0]):
-                members = xs[codes == c]
-                if len(members):
-                    cs[c] = np.floor_divide(members.sum(0), len(members))
-        cw[:, m * sub : (m + 1) * sub] = cs
-
-    # queries: probe cells by the same argmin-d2 rule; ADC tables per
-    # (query, probed cell) — driver-bounded |Q|·n_probe·M·C
-    q_rows = emb.where(F.col(id_col).isin(qids)).select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = _np_quantize(pd.Series([r[vec_col] for r in q_rows]))
-    cn = (c_mat * c_mat).sum(1)
-    qd2 = cn[None, :] - 2 * _gemm53(q_mat, c_mat.T)
-    probe_idx = np.argsort(qd2, axis=1, kind="stable")[:, :n_probe]
-    tables = np.empty((len(q_ids), probe_idx.shape[1], n_subspaces, n_codes), dtype=np.int64)
-    for qi in range(len(q_ids)):
-        for pi in range(probe_idx.shape[1]):
-            rq = q_mat[qi] - c_mat[probe_idx[qi, pi]]
-            for m in range(n_subspaces):
-                rm = rq[m * sub : (m + 1) * sub]
-                cm = cw[:, m * sub : (m + 1) * sub]
-                tables[qi, pi, m, :] = (rm * rm).sum() + (cm * cm).sum(1) - 2 * (cm @ rm)
-    bc = emb.sparkSession.sparkContext.broadcast((c_mat, cw, q_ids, probe_idx, tables))
-
-    def score(batches):
-        import pyarrow as pa
-
-        cmat, cwm, qids_np, pidx, tabs = bc.value
-        cnorm = (cmat * cmat).sum(1)
-        n_q, n_p = pidx.shape
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            v = _quantize_arrow(batch.column(1))
-            cell = (cnorm[None, :] - 2 * _gemm53(v, cmat.T)).argmin(axis=1)
-            resid = v - cmat[cell]
-            codes = np.empty((len(ids), n_subspaces), dtype=np.int64)
-            for m in range(n_subspaces):
-                rs = resid[:, m * sub : (m + 1) * sub]
-                cs = cwm[:, m * sub : (m + 1) * sub]
-                d2 = (
-                    (rs * rs).sum(1)[:, None]
-                    + (cs * cs).sum(1)[None, :]
-                    - 2 * _gemm53(rs, cs.T)
-                )
-                codes[:, m] = np.argmin(d2, axis=1)
-            qout, nout, dout = [], [], []
-            for qi in range(n_q):
-                for pi in range(n_p):
-                    sel = np.nonzero((cell == pidx[qi, pi]) & (ids != qids_np[qi]))[0]
-                    if not sel.size:
-                        continue
-                    ad = np.zeros(sel.size, dtype=np.int64)
-                    for m in range(n_subspaces):
-                        ad += tabs[qi, pi, m, codes[sel, m]]
-                    qout.append(np.full(sel.size, qids_np[qi], dtype=np.int64))
-                    nout.append(ids[sel])
-                    dout.append(ad)
-            if not qout:
-                continue
-            qcol = np.concatenate(qout)
-            ncol = np.concatenate(nout)
-            dcol = np.concatenate(dout)
-            order = np.lexsort((ncol, dcol, qcol))
-            qcol, ncol, dcol = qcol[order], ncol[order], dcol[order]
-            starts = np.flatnonzero(np.r_[True, qcol[1:] != qcol[:-1]])
-            pos = np.arange(len(qcol)) - np.repeat(starts, np.diff(np.r_[starts, len(qcol)]))
-            topk = pos < k
-            yield pa.record_batch(
-                {"query_id": qcol[topk], "neighbor_id": ncol[topk], "adist": dcol[topk]}
-            )
-
-    scored = emb.select(id_col, vec_col).mapInArrow(
-        score, "query_id long, neighbor_id long, adist long"
+    tmat = _id_matrix(t_rows, id_col, vec_col)[1]
+    # cells by argmin ‖x−c‖², ties → first (lower cid)
+    tres = tmat - c_mat[_sq_dist(tmat, c_mat).argmin(axis=1)]
+    cw = _pq_train(tres[:n_codes], tres[:n_train], n_subspaces, sub, train_rounds)
+    q_ids, q_mat = _id_matrix(q_rows, id_col, vec_col)
+    return _ivfpq_topk(
+        emb, q_ids, q_mat, c_mat, cw, _sq_dist, k, n_probe, n_subspaces, sub,
+        id_col, vec_col,
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    out = scored.withColumn("rank", F.row_number().over(w).cast("int")).where(
-        F.col("rank") <= k
-    )
-    out._flockdb_caches = [bc]  # released by the caller (see ivfpq_ann_topk)
-    return out
 
 
 def ivfpq_trained_sql(
@@ -3155,7 +3024,8 @@ def binary_ann_topk(
     Output: (query_id, neighbor_id, dot_micro2, rank) — the exact-dot
     contract shared by brute_force_topk / pq_rerank_topk."""
     import numpy as np
-    from pyspark.sql import Window
+
+    from .dedup import carry_caches
 
     qids = [int(i) for i in query_ids]
     n_sk = rotations + 1
@@ -3168,12 +3038,7 @@ def binary_ann_topk(
     # the exact rerank then happens INSIDE the sketch pass (below) against
     # these broadcast query vectors, so there is no second corpus pass, no
     # gather join and no broadcast build at all (r11; guide §2.4/§8)
-    q_rows = (
-        emb.where(F.col(id_col).isin(qids))
-        .select(F.col(id_col).alias("vid"), quantized(vec_col).alias("_ev"))
-        .select("vid", "_ev", F.expr(f"array({', '.join(packs)})").alias("sks"))
-        .collect()
-    )
+    q_rows = _collect_legs([skd.where(F.col("vid").isin(qids))])[0]
     if len(q_rows) != len(qids):
         raise ValueError(
             f"binary_ann_topk: {len(qids) - len(q_rows)} query ids missing "
@@ -3182,77 +3047,45 @@ def binary_ann_topk(
     q_ids = np.array([r["vid"] for r in q_rows], dtype=np.int64)
     q_sk = np.array([r["sks"] for r in q_rows], dtype=np.int64)  # (|Q|, n_sk)
     q_ev = np.array([r["_ev"] for r in q_rows], dtype=np.int64)  # (|Q|, dims)
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_sk, q_ev))
 
-    def ham(batches):
-        import pyarrow as pa
+    def score(st, batch):
+        qs, qe = st
+        n = batch.num_rows
+        ev = batch.column(1).values.to_numpy(zero_copy_only=False).reshape(n, -1).astype(np.int64)
+        # fixed-length list<int64> → (n, n_sk) without a Python loop
+        sk = batch.column(2).values.to_numpy(zero_copy_only=False).reshape(n, n_sk)
+        # xor tensor (n, |Q|, n_sk), vectorized popcount, then the
+        # multi-table OR-amplification: a candidate ranks by its BEST
+        # sketch (min Hamming over rotations) — close pairs only need
+        # to look close under ONE hyperplane family
+        x = np.bitwise_xor(sk[:, None, :], qs[None, :, :])
+        h = (
+            np.unpackbits(x.view(np.uint8).reshape(n, -1), axis=1)
+            .reshape(n, len(qs), n_sk, 64)
+            .sum(axis=3)
+            .min(axis=2)
+            .astype(np.int64)
+        )
 
-        qi, qs, qe = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = _i64_arrow(batch.column(0))
-            ev = (
-                batch.column(1)
-                .values.to_numpy(zero_copy_only=False)
-                .reshape(len(ids), -1)
-                .astype(np.int64)
-            )
-            # fixed-length list<int64> → (n, n_sk) without a Python loop
-            sk = (
-                batch.column(2)
-                .values.to_numpy(zero_copy_only=False)
-                .reshape(len(ids), n_sk)
-            )
-            # xor tensor (n, |Q|, n_sk), vectorized popcount, then the
-            # multi-table OR-amplification: a candidate ranks by its BEST
-            # sketch (min Hamming over rotations) — close pairs only need
-            # to look close under ONE hyperplane family
-            x = np.bitwise_xor(sk[:, None, :], qs[None, :, :])
-            h = (
-                np.unpackbits(x.view(np.uint8).reshape(len(ids), -1), axis=1)
-                .reshape(len(ids), len(qi), n_sk, 64)
-                .sum(axis=3)
-                .min(axis=2)
-                .astype(np.int64)
-            )
-            qout, nout, hout, dout = [], [], [], []
-            for j in range(len(qi)):
-                sel = np.nonzero(ids != qi[j])[0]
-                top = sel[np.lexsort((ids[sel], h[sel, j]))[:k_cand]]
-                qout.append(np.full(len(top), qi[j], dtype=np.int64))
-                nout.append(ids[top])
-                hout.append(h[top, j])
-                # exact integer dot for the LOCAL candidates only (≤ k_cand
-                # rows per query per batch) — the rerank rides the sketch
-                # pass instead of a second corpus gather
-                dout.append(_gemm53(ev[top], qe[j][:, None]).reshape(-1))
-            yield pa.record_batch(
-                {
-                    "query_id": np.concatenate(qout),
-                    "neighbor_id": np.concatenate(nout),
-                    "hamming": np.concatenate(hout),
-                    "dot_micro2": np.concatenate(dout),
-                }
-            )
+        def dots(qi, ri):
+            # exact integer dot for the LOCAL candidates only (≤ k_cand
+            # rows per query per batch) — the rerank rides the sketch
+            # pass instead of a second corpus gather
+            return {"dot_micro2": _rowdot(ev[ri], qe[qi])}
 
-    scored = skd.mapInArrow(
-        ham, "query_id long, neighbor_id long, hamming long, dot_micro2 long"
-    )
+        qi, ri = _pairs(len(qs), n)
+        return qi, ri, h.T.reshape(-1), dots
+
     # global candidate cut by (hamming, neighbor_id), then the exact-dot
     # ranking among the survivors — two windows over the SAME query_id
     # partitioning: one exchange for the whole query (guide §2.4)
-    wc = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot_micro2"), F.asc("neighbor_id"))
-    out = (
-        scored.withColumn("crn", F.row_number().over(wc))
-        .where(F.col("crn") <= k_cand)
-        .select("query_id", "neighbor_id", "dot_micro2")
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
+    cand = _ann_topk(
+        skd, q_ids, (q_sk, q_ev), score, k_cand, "hamming", True, ", dot_micro2 long"
     )
-    out._flockdb_caches = [bc]  # the release convention (see ivfpq_ann_topk)
-    return out
+    out = _rank_window(
+        cand.select("query_id", "neighbor_id", "dot_micro2"), "dot_micro2", False, k
+    )
+    return carry_caches(out, cand)
 
 
 def binary_ann_sql(

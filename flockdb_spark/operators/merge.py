@@ -15,7 +15,7 @@ instead of a full sort of every partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import EDGE_COLUMNS, METADATA_COLUMNS, state_priority
@@ -49,19 +49,7 @@ def temporal_merge(existing: DataFrame, writes: DataFrame) -> DataFrame:
     )
 
 
-def _plan_size_bytes(df: DataFrame) -> float | None:
-    """Catalyst's sizeInBytes estimate for ``df`` — zero jobs (file-source
-    relations report parquet footer sizes; derived plans propagate them).
-    None when the JVM stats are unavailable — callers must fall back."""
-    try:
-        return float(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — stats are best-effort by design
-        return None
-
-
-def sequenced_merge(
-    existing: DataFrame, writes: DataFrame, strategy: str = "auto"
-) -> DataFrame:
+def sequenced_merge(existing: DataFrame, writes: DataFrame) -> DataFrame:
     """W2 with the reference's POSITION-PRESERVATION rule
     (``SqlShard.scala:436-446``): an update keeps the edge's existing
     ``position`` unless it resurrects a Removed/Negative edge to Normal
@@ -92,43 +80,14 @@ def sequenced_merge(
     or a batch with no Removed/Negative→Normal pattern — never pays the
     ``array_sort`` + fold.
 
-    ``strategy`` picks the physical shape (identical results, pinned by
-    test):
-
-    - ``"auto"`` (default, r11 — VERDICT r10 item 5) — picks from
-      Catalyst's zero-job size estimates: when the write batch is larger
-      than 4× the existing side (the bulk-replay / fresh-copy-target
-      shape, where per-key histories can be as deep as the op log), the
-      spill-safe ``"sort"`` runs; otherwise ``"fold"``.  The ratio is a
-      DEPTH PROXY, deliberately safety-first: an incremental batch
-      against a populated table is always fold (writes ≪ existing); a
-      replay onto an empty/small target is always sort, even when its
-      keys happen to be unique — sort is ~1.4× slower there, never
-      OOM-deeper.  Stats unavailable → fold (the r10 default).
-
-    - ``"fold"`` — the hash aggregation above.  Right for the
-      INCREMENTAL merge path: per-key histories are shallow, ``max_by``
-      gets map-side partial combine, nothing is sorted.
-    - ``"sort"`` — one sort shuffle (``row_number``/``lag`` window in
-      canonical serialization order) + one hash agg.  Right for the BULK
-      REPLAY / fresh-shard copy shape (the reference's ``jobs/Copy.scala``
-      target side): every key carries its full op history, so the fold
-      path's per-key ``collect_list`` array is as deep as the history
-      (unbounded executor-OOM risk at 100 TB), while the window path rides
-      Spark's spillable external sort and keeps per-row state O(1).
-      Pick it for SAFETY at depth, not speed: on the local fixtures the
-      fold is faster at every SF tried (clean alternating A/B at sf1.0:
-      fold 0.58 s, sort 0.82 s — the window's full sort costs more than
-      the interpreted fold while per-key arrays still fit comfortably).
+    The per-key ``collect_list`` array is as deep as the key's history in
+    the batch, so a bulk replay whose keys carry very long op histories
+    (the reference's ``jobs/Copy.scala`` target side) holds each history in
+    executor memory.  On the local fixtures the fold is also the faster
+    shape: a clean alternating A/B at sf1.0 against a ``row_number``/``lag``
+    window replay measured fold 0.58 s, window 0.82 s.
     """
-    if strategy == "auto":
-        we, ex = _plan_size_bytes(writes), _plan_size_bytes(existing)
-        strategy = (
-            "sort" if we is not None and ex is not None and we > 4 * ex else "fold"
-        )
     unioned = existing.select(*EDGE_COLUMNS).unionByName(writes.select(*EDGE_COLUMNS))
-    if strategy == "sort":
-        return _sequenced_sort_replay(unioned)
     # the canonical serialization comparator: (updated_at, prio, position)
     # decides; state/count break exact ties deterministically (state↔prio is
     # bijective, so in practice only count can still differ)
@@ -180,45 +139,6 @@ def sequenced_merge(
     return agg.select(
         *_EDGE_KEY,
         F.when(needs_fold, folded).otherwise(F.col("_first_pos")).alias("position"),
-        F.col("_last.updated_at").alias("updated_at"),
-        F.col("_last.count").alias("count"),
-        F.col("_last.state").alias("state"),
-    ).select(*EDGE_COLUMNS)
-
-
-def _sequenced_sort_replay(unioned: DataFrame) -> DataFrame:
-    """``sequenced_merge(strategy="sort")`` body: the same canonical
-    serialization, expressed as a window instead of a per-key array.
-
-    ``row_number``/``lag`` over (key ORDER BY updated_at, prio, position,
-    state, count) reproduce the fold's two signals directly: the LWW winner
-    is the max-``rn`` row, and the position is the one set by the LAST op
-    that either starts the history (rn=1) or resurrects Removed/Negative →
-    Normal (``SqlShard.scala:436-446``) — ``max_by`` with a ``when`` ordinal
-    skips the non-setting rows.  One spillable sort exchange + one hash
-    aggregation; no per-key array ever materializes.
-    """
-    sortfull = F.struct(
-        F.col("updated_at"),
-        state_priority("state").alias("prio"),
-        F.col("position"),
-        F.col("state"),
-        F.col("count"),
-    )
-    w = Window.partitionBy(*_EDGE_KEY).orderBy(sortfull)
-    seq = unioned.withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_prev", F.lag("state").over(w)
-    )
-    sets_position = (F.col("_rn") == 1) | (
-        F.col("_prev").isin(1, 3) & (F.col("state") == 0)
-    )
-    agg = seq.groupBy(*_EDGE_KEY).agg(
-        F.max_by(F.struct("updated_at", "count", "state"), F.col("_rn")).alias("_last"),
-        F.max_by("position", F.when(sets_position, F.col("_rn"))).alias("position"),
-    )
-    return agg.select(
-        *_EDGE_KEY,
-        "position",
         F.col("_last.updated_at").alias("updated_at"),
         F.col("_last.count").alias("count"),
         F.col("_last.state").alias("state"),
@@ -332,7 +252,6 @@ def apply_oplog(
     has_single: bool = True,
     has_mass: bool = True,
     split_untouched: bool = True,
-    merge_strategy: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Replay a batch of write operations (W1 single + W3 mass-action).
 
@@ -369,10 +288,6 @@ def apply_oplog(
     ``edges``/``metadata`` to the touched vertices (q18's up-front
     semi-join).  Pass False there: every input row enters the merge anyway,
     so the distinct + two joins — three extra shuffles — are pruned.
-
-    ``merge_strategy``: physical shape of the edge merge (see
-    ``sequenced_merge``) — ``"fold"`` (default) for incremental batches,
-    ``"sort"`` for bulk replays whose keys carry deep op histories.
 
     Returns (merged_edges, merged_metadata).
     """
@@ -483,9 +398,7 @@ def apply_oplog(
     else:
         writes = single.select(*EDGE_COLUMNS)
     if not split_untouched:
-        merged_edges = sequenced_merge(edges, writes, merge_strategy).select(
-            *EDGE_COLUMNS
-        )
+        merged_edges = sequenced_merge(edges, writes).select(*EDGE_COLUMNS)
         # recount everything (all input is touched by assumption); vertices
         # holding metadata but no edges must still survive
         ekeys = merged_edges.select("graph_id", "source_id").distinct()
@@ -521,7 +434,7 @@ def apply_oplog(
     edges_rest = edges.join(touched, ["graph_id", "source_id"], "left_anti")
     # write path uses the position-preserving fold (updateEdge semantics,
     # SqlShard.scala:436-446); copy/repair keeps row-level temporal_merge
-    touched_merged = sequenced_merge(edges_touched, writes, merge_strategy)
+    touched_merged = sequenced_merge(edges_touched, writes)
     merged_edges = edges_rest.select(*EDGE_COLUMNS).unionByName(touched_merged)
 
     # metadata likewise: recount only touched vertices, carry the rest

@@ -735,10 +735,8 @@ def q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty_md = empty_df(spark, METADATA_SCHEMA)
     # fresh-store replay: every row is batch rows, so the touched-key
     # split would be three dead shuffles (see apply_oplog docstring).
-    # merge_strategy stays "fold": measured faster than the sort replay at
-    # both sf0.1 and sf1.0 (0.58 s vs 0.82 s at sf1.0, clean alternating
-    # A/B); "sort" is the memory-bounded choice for histories too deep for
-    # a collect_list buffer, which this fixture's ≤4k-op keys are not
+    # The merge is the per-key fold (see sequenced_merge); this fixture's
+    # ≤4k-op keys fit its collect_list buffer comfortably
     merged, _ = apply_oplog(
         empty_edges, empty_md, ops, has_mass=False, split_untouched=False
     )

@@ -494,17 +494,13 @@ def ivf_cells_available_now(
     that path is parity-tested against the batch aggregate over an
     out-of-order two-batch replay
     (test_ivf_cells_update_mode_upsert_matches_batch)."""
-    from flockdb_spark.functions.similarity import _np_quantize
-
-    import numpy as np
-    import pandas as pd
+    from flockdb_spark.functions.similarity import _id_matrix
 
     path = f"{sf_dir}/embeddings.parquet"
     batch = spark.read.parquet(path)
     cent_rows = batch.orderBy("vec_id").limit(n_centroids).select("vec_id", "embedding").collect()
-    order = np.argsort(np.array([r["vec_id"] for r in cent_rows], dtype=np.int64), kind="stable")
-    c_mat = _np_quantize(pd.Series([r["embedding"] for r in cent_rows]))[order]
-    centroids = [(int(i), [int(x) for x in c_mat[i]]) for i in range(len(order))]
+    c_mat = _id_matrix(cent_rows, "vec_id", "embedding")[1]
+    centroids = [(int(i), [int(x) for x in c_mat[i]]) for i in range(len(c_mat))]
 
     emb = (
         spark.readStream.schema(batch.schema)

@@ -1927,6 +1927,39 @@ def test_quantize_arrow_matches_pandas():
     assert _quantize_arrow(pa.array([], pa.list_(pa.float64()))).size == 0
 
 
+def test_local_topk_matches_python_reference():
+    """The ANN kernel's per-batch top-k against the plain loop it replaces:
+    self pairs dropped, score ascending or descending, exact-score ties to
+    the lower neighbor id, and a query (or a whole batch) with fewer than k
+    candidates keeps all of them."""
+    import numpy as np
+
+    from flockdb_spark.functions.similarity import _local_topk
+
+    def reference(q, nb, s, k, ascending):
+        out = []
+        for query in sorted(set(q.tolist())):
+            rows = [i for i in range(len(q)) if q[i] == query and nb[i] != query]
+            rows.sort(key=lambda i: (s[i] if ascending else -s[i], nb[i]))
+            out.extend(rows[:k])
+        return out
+
+    rng = np.random.default_rng(7)
+    q = np.r_[rng.integers(0, 6, 300), [99, 99]]  # query 99: 2 candidates
+    nb = np.r_[rng.integers(0, 40, 300), [5, 3]]  # ids 0-5 hit self pairs
+    s = np.r_[rng.integers(-3, 4, 300), [1, 1]]  # few values: many exact ties
+    for ascending in (True, False):
+        for k in (1, 5):
+            assert _local_topk(q, nb, s, k, ascending).tolist() == reference(
+                q, nb, s, k, ascending
+            )
+        small = slice(0, 3)  # a batch smaller than k
+        assert _local_topk(q[small], nb[small], s[small], 10, ascending).tolist() == (
+            reference(q[small], nb[small], s[small], 10, ascending)
+        )
+    assert _local_topk(q[:0], nb[:0], s[:0], 5, True).size == 0
+
+
 def test_list_array_roundtrip():
     """_list_array must emit each matrix row as one list element, preserving
     int64 values exactly (it is re-emitted verbatim per LSH table)."""

@@ -228,48 +228,3 @@ def test_split_untouched_false_equals_true(spark):
     general = snap(apply_oplog(edges, md, ops))
     fast = snap(apply_oplog(edges, md, ops, split_untouched=False))
     assert fast == general
-
-
-def test_sequenced_merge_auto_strategy_picks_both_shapes(spark):
-    """VERDICT r10 item 5: strategy="auto" (the new default) must route the
-    bulk-replay shape (writes >> existing — per-key history can be as deep
-    as the op log) to the spill-safe sort/window plan, and the incremental
-    shape (writes << existing) to the fold hash-agg plan — decided from
-    Catalyst size stats with ZERO jobs, and producing identical rows."""
-    from flockdb_spark.operators.merge import sequenced_merge
-    from flockdb_spark.schema import EDGE_SCHEMA
-
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="seqmerge_auto_")
-    spark.createDataFrame(
-        [(1, 1, d, 100 + i, 1000 + i, 0, 0) for d in range(500) for i in range(8)],
-        EDGE_SCHEMA,
-    ).write.mode("overwrite").parquet(f"{tmp}/big")
-    spark.createDataFrame(
-        [(1, 1, 1, 999, 5000, 0, 0)], EDGE_SCHEMA
-    ).write.mode("overwrite").parquet(f"{tmp}/small")
-    # parquet-backed like real callers: Catalyst has footer size stats
-    # (in-memory LogicalRDD inputs have none — auto falls back to fold,
-    # which the RDD-backed property tests cover)
-    big = spark.read.parquet(f"{tmp}/big")
-    small = spark.read.parquet(f"{tmp}/small")
-
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    # bulk replay: existing tiny, writes deep -> the window/sort shape
-    replay = sequenced_merge(small, big)
-    assert "indow" in plan(replay)  # Window node (case-insensitive head)
-    # incremental: existing big, writes one op -> the fold shape, no window
-    incr = sequenced_merge(big, small)
-    assert "indow" not in plan(incr)
-
-    # both autos agree with the pinned strategies row-for-row
-    key = lambda r: tuple(r)  # noqa: E731
-    assert sorted(map(key, replay.collect())) == sorted(
-        map(key, sequenced_merge(small, big, "sort").collect())
-    )
-    assert sorted(map(key, incr.collect())) == sorted(
-        map(key, sequenced_merge(big, small, "fold").collect())
-    )

@@ -127,12 +127,12 @@ def python_sequenced(ops):
     return {k: (v[1], v[2], v[0]) for k, v in best.items()}
 
 
-def spark_sequenced(spark, ops_a, ops_b, strategy="fold"):
+def spark_sequenced(spark, ops_a, ops_b):
     from flockdb_spark.operators.merge import sequenced_merge
 
     a = edge_rows_df(spark, [(1, s, d, pos, ts, state) for s, d, ts, state, pos in ops_a])
     b = edge_rows_df(spark, [(1, s, d, pos, ts, state) for s, d, ts, state, pos in ops_b])
-    rows = sequenced_merge(a, b, strategy).collect()
+    rows = sequenced_merge(a, b).collect()
     return {
         (r["source_id"], r["destination_id"]): (r["updated_at"], r["state"], r["position"])
         for r in rows
@@ -143,16 +143,6 @@ def spark_sequenced(spark, ops_a, ops_b, strategy="fold"):
 @given(st_.lists(op_strategy, min_size=1, max_size=8), st_.lists(op_strategy, max_size=8))
 def test_sequenced_merge_matches_python_fold(spark, ops_a, ops_b):
     assert spark_sequenced(spark, ops_a, ops_b) == python_sequenced(ops_a + ops_b)
-
-
-@settings(max_examples=12, deadline=None)
-@given(st_.lists(op_strategy, min_size=1, max_size=8), st_.lists(op_strategy, max_size=8))
-def test_sequenced_merge_sort_strategy_matches_python_fold(spark, ops_a, ops_b):
-    """strategy="sort" (window replay) is the same operator as the default
-    hash-agg fold — both must match the python reference on every input."""
-    assert spark_sequenced(spark, ops_a, ops_b, "sort") == python_sequenced(
-        ops_a + ops_b
-    )
 
 
 @settings(max_examples=8, deadline=None)
